@@ -47,7 +47,6 @@ object ScalingBench {
     // foreachBatch MERGE jobs repartition at 3×cores of the CURRENT level
     // (Pipeline.applyShufflePartitions).
     val statePartitions = opt.getOrElse("--state-partitions", "96").toInt
-    val wmDelay = opt.getOrElse("--wm", "10 minutes")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName(s"graft-scaling-$cpus")
@@ -123,10 +122,6 @@ object ScalingBench {
     lake.create(Schemas.transcriptNoTool, buckets)
 
     val dedup = !args.contains("--no-dedup")
-    // "interval" (default) = interval-compressed lsn dedup state (O(range
-    // buckets)); "hash" = dropDuplicatesWithinWatermark (O(events) state,
-    // the round-3 GC wall) — kept for A/B
-    val dedupImpl = opt.getOrElse("--dedup-impl", "interval")
     // Per-batch decomposition via the progress stream: where a batch's wall
     // went (total trigger, addBatch) and what the stateful dedup cost
     // (update/removal/commit times, state rows, state memory). Host noise
@@ -190,8 +185,7 @@ object ScalingBench {
           spark.sparkContext.hadoopConfiguration, Schemas.transcriptNoTool, 8)
         Pipeline.startWithSink(spark, warmBinlog, warmRaw, s"$warmDir/ckpt",
           maxFilesPerTrigger = 1, availableNow = true, transportDedup = dedup,
-          watermarkDelay = wmDelay, applyShufflePartitions = Some(shuffle),
-          dedupImpl = dedupImpl).awaitTermination()
+          applyShufflePartitions = Some(shuffle)).awaitTermination()
         warmRaw.normalizeIncremental(spark).count()
         ()
       } else {
@@ -199,8 +193,7 @@ object ScalingBench {
         warmLake.create(Schemas.transcriptNoTool, 8)
         Pipeline.runAvailable(spark, warmBinlog, warmLake, s"$warmDir/ckpt",
           maxFilesPerTrigger = 1, transportDedup = dedup,
-          applyShufflePartitions = Some(shuffle), watermarkDelay = wmDelay,
-          dedupImpl = dedupImpl)
+          applyShufflePartitions = Some(shuffle))
       }
       fs.delete(new org.apache.hadoop.fs.Path(warmDir), true)
       Thread.sleep(1500) // listener bus is async: let warmup events land
@@ -215,8 +208,7 @@ object ScalingBench {
       case Some(raw) =>
         Pipeline.startWithSink(spark, binlogDir, raw, s"$runDir/ckpt",
           maxFilesPerTrigger = fpt, availableNow = true,
-          transportDedup = dedup, watermarkDelay = wmDelay,
-          applyShufflePartitions = Some(shuffle), dedupImpl = dedupImpl)
+          transportDedup = dedup, applyShufflePartitions = Some(shuffle))
           .awaitTermination()
         syncSec = (System.nanoTime() - t0) / 1e9
         val tn = System.nanoTime()
@@ -225,8 +217,7 @@ object ScalingBench {
       case None =>
         Pipeline.runAvailable(spark, binlogDir, lake, s"$runDir/ckpt",
           maxFilesPerTrigger = fpt, transportDedup = dedup,
-          applyShufflePartitions = Some(shuffle), watermarkDelay = wmDelay,
-          dedupImpl = dedupImpl,
+          applyShufflePartitions = Some(shuffle),
           // --maintenance-every N: inline compact+vacuum on the commit
           // thread, to price the maintenance tax at criterion scale
           maintenance = opt.get("--maintenance-every").map(_.toInt)
@@ -263,7 +254,7 @@ object ScalingBench {
       f""""liveRows":$live,"contentHash":"$contentHash",""" +
       f""""segments":$segments,"batches":${segments / fpt},""" +
       f""""statePartitions":$statePartitions,"shuffle":$shuffle,""" +
-      s""""dedup":$dedup,"dedupImpl":"$dedupImpl","lsnStride":$stride,""" +
+      s""""dedup":$dedup,"lsnStride":$stride,""" +
       s""""warmup":${!args.contains("--no-warmup")},""" +
       (if (rawMode) f""""sink":"raw-append","syncSec":$syncSec%.2f,"normSec":$normSec%.2f,""" else "") +
       s""""batchWallMs":[${perBatch.mkString(",")}],""" +

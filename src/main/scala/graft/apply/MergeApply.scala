@@ -57,7 +57,7 @@ object MergeApply {
     // `isData` embeds the per-event stale guard (reference should_emit,
     // src/control/state.rs:375-395): an event at or below the table's
     // applied position — an at-least-once redelivery that outlived the
-    // dedup watermark — must not reach the LWW reduce, where it could
+    // dedup state (a rebase) — must not reach the LWW reduce, where it could
     // resurrect a column value a fresher same-batch event didn't carry.
     val isData = col("op") < Op.SchemaChange && col("lsn") > snap.endLsn
     val pre = batch.select(
@@ -132,9 +132,9 @@ object MergeApply {
     // No explicit dropDuplicates here: the LWW reduce is idempotent under
     // duplicated rows (same lsn ⇒ identical row ⇒ same max_by winner), so an
     // extra shuffle on lsn would buy nothing. Cross-batch redelivery is
-    // handled by the streaming dropDuplicatesWithinWatermark stage, the
-    // batchId guard, the per-event `lsn > snap.endLsn` filter in `isData`,
-    // and the per-key _lsn guard in the MERGE (defense in depth).
+    // handled by the streaming IntervalDedup stage, the batchId guard, the
+    // per-event `lsn > snap.endLsn` filter in `isData`, and the per-key
+    // _lsn guard in the MERGE (defense in depth).
     val ups = Dedup.lwwReduce(data, payload, addLsn)
 
     if (touched.isEmpty) {

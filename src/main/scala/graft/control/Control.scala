@@ -181,12 +181,6 @@ final class Control(
     maxFilesPerTrigger: Int = 1,
     transportDedup: Boolean = true,
     chunkSource: Option[Backfill.ChunkSource] = None,
-    // "interval" (default) | "hash". NOTE: the dedup implementation is
-    // baked into a checkpoint's stateful-operator plan — resuming a
-    // checkpoint written under the other implementation fails with a
-    // state(-schema) mismatch; pass "hash" to keep driving pre-round-4
-    // checkpoints.
-    dedupImpl: String = "interval",
     // inline lake maintenance (compact + vacuum on the commit thread)
     maintenance: Option[Pipeline.Maintenance] = None,
     // dedup-state size (bytes under <checkpoint>/state) above which
@@ -241,7 +235,6 @@ final class Control(
       query = Some(Pipeline.start(spark, binlogDir, lake, checkpointDir,
         filesPerTrigger, availableNow = false,
         transportDedup = transportDedup, chunkSource = chunkSource,
-        dedupImpl = dedupImpl,
         backfillGate = () => !snapshotPausedFlag,
         maintenance = maintenance))
   }
@@ -288,7 +281,6 @@ final class Control(
     drainingFlag = true
     try Pipeline.runAvailable(spark, binlogDir, lake, checkpointDir,
       filesPerTrigger, transportDedup, chunkSource,
-      dedupImpl = dedupImpl,
       backfillGate = () => !snapshotPausedFlag,
       maintenance = maintenance)
     finally {

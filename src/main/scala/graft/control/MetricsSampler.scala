@@ -9,7 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * events/sec and `lag = now − last_commit_ts` once per second,
   * src/control/metrics_sampler.rs:1-67, src/control/state.rs:170-224; in
   * Spark the per-batch StreamingQueryProgress IS the sampler — rate and
-  * event-time high watermark come with every batch, no polling thread).
+  * event-time high mark come with every batch, no polling thread).
   *
   * `lagMs` = batch wall-clock timestamp − max event time in the batch:
   * how far the applied stream trails the source, the first number an
@@ -79,14 +79,10 @@ final class MetricsSampler(queryName: String, maxSamples: Int = 10000)
     val p = e.progress
     if (p.name == queryName) {
       val ts = Instant.parse(p.timestamp).toEpochMilli
-      // event-time high mark: watermark bookkeeping when present (hash
-      // dedup mode), else the pipeline's CollectMetrics observation
-      val observedMax = Option(p.observedMetrics.get("graft_event_time"))
+      // event-time high mark: the pipeline's CollectMetrics observation
+      val lag = Option(p.observedMetrics.get("graft_event_time"))
         .flatMap(r => Option(r.getAs[java.sql.Timestamp]("max_ts")))
-        .map(_.getTime)
-      val lag = Option(p.eventTime.get("max"))
-        .map(m => ts - Instant.parse(m).toEpochMilli)
-        .orElse(observedMax.map(ts - _))
+        .map(ts - _.getTime)
         .getOrElse(-1L)
       val rate =
         if (p.processedRowsPerSecond.isNaN || p.processedRowsPerSecond.isInfinite) 0.0

@@ -27,7 +27,6 @@ final class MultiControl(
     checkpointDir: String,
     maxFilesPerTrigger: Int = 1,
     transportDedup: Boolean = true,
-    dedupImpl: String = "interval",
     maintenance: Option[Pipeline.Maintenance] = None,
     rebaseThresholdBytes: Long = 0L) extends EngineControl {
 
@@ -48,7 +47,7 @@ final class MultiControl(
     if (!isRunning)
       query = Some(Pipeline.startMulti(spark, binlogDir, lakes, checkpointDir,
         filesPerTrigger, availableNow = false,
-        transportDedup = transportDedup, dedupImpl = dedupImpl,
+        transportDedup = transportDedup,
         maintenance = maintenance))
   }
 
@@ -65,7 +64,7 @@ final class MultiControl(
     drainingFlag = true
     try Pipeline.startMulti(spark, binlogDir, lakes, checkpointDir,
       filesPerTrigger, availableNow = true,
-      transportDedup = transportDedup, dedupImpl = dedupImpl,
+      transportDedup = transportDedup,
       maintenance = maintenance).awaitTermination()
     finally {
       drainingFlag = false

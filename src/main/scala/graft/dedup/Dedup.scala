@@ -14,8 +14,7 @@ import graft.model.{Op, Schemas}
   * shuffles *every* event of a hot key to one partition), hash aggregation
   * gets map-side partial combine from Catalyst, so a key with millions of
   * duplicate events collapses to ≤ numPartitions partial rows before the
-  * shuffle — the skew-defusal the north rule asks for, for free. An explicit
-  * two-phase salted variant is provided for measurement/comparison.
+  * shuffle — the skew-defusal the north rule asks for, for free.
   *
   * TOAST/"unchanged" semantics (reference: Value::Unchanged,
   * src/core/record.rs:130-131; per-combination MERGE arms,
@@ -68,35 +67,5 @@ object Dedup {
           max(when_).isNotNull.as(s"${c}__carried"))
       }
     data.groupBy(Schemas.keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Explicit two-phase salted LWW (partial per salt → final). Semantically
-    * identical to [[lwwReduce]]; exists to evidence the salting pattern and
-    * for A/B benchmarking against the hash-aggregate partial combine.
-    */
-  def lwwReduceSalted(
-      df: DataFrame,
-      payload: Seq[String],
-      saltBuckets: Int,
-      addLsn: Map[String, Long] = Map.empty): DataFrame = {
-    val data = df.filter(col("op") < Op.SchemaChange)
-      .withColumn("_salt", pmod(hash(col("lsn")), lit(saltBuckets)))
-    val phase1Aggs: Seq[Column] =
-      Seq(max(col("lsn")).as("lsn"), max_by(col("op"), col("lsn")).as("op")) ++
-      payload.flatMap { c =>
-        val when_ = when(carries(c, addLsn), col("lsn"))
-        Seq(max_by(col(c), when_).as(c), max(when_).as(s"${c}__clsn"))
-      }
-    val partial = data
-      .groupBy((Schemas.keys :+ "_salt").map(col): _*)
-      .agg(phase1Aggs.head, phase1Aggs.tail: _*)
-    val phase2Aggs: Seq[Column] =
-      Seq(max(col("lsn")).as("lsn"), max_by(col("op"), col("lsn")).as("op")) ++
-      payload.flatMap { c =>
-        Seq(
-          max_by(col(c), col(s"${c}__clsn")).as(c),
-          max(col(s"${c}__clsn")).isNotNull.as(s"${c}__carried"))
-      }
-    partial.groupBy(Schemas.keys.map(col): _*).agg(phase2Aggs.head, phase2Aggs.tail: _*)
   }
 }

@@ -70,28 +70,21 @@ object IntervalDedup {
   val DefaultShift = 14
 
   /** Per-bucket seen-set over the bucket's `[key << shift,
-    * (key+1) << shift)` lsn range, in one of three roaring-style container
-    * encodings (legacy forms decode unchanged):
+    * (key+1) << shift)` lsn range, in one of two roaring-style container
+    * encodings:
     *
     *   - dense: `words.length == nWords` — the fixed bitmap, one bit per
-    *     lsn slot (what every pre-round-6 checkpoint holds).
-    *   - sparse (self-describing, round-7 writer): 1-3 leading `-shift`
-    *     SENTINELS (slot values are non-negative, so the sign
-    *     discriminates) followed by the strictly-increasing SET SLOT
-    *     VALUES. The sentinel count pads the TOTAL length to a
-    *     non-power-of-two, so a sparse container can never equal ANY
-    *     shift's dense length (every nWords is a power of two) — without
-    *     the padding, a shift-14 sparse array of length 16 resumed at
-    *     shift 10 would be misread as that shift's dense bitmap. Used
-    *     while still strictly shorter than the bitmap. The embedded shift
-    *     makes a different-shift resume LOUD deterministically — the
-    *     round-6 guard was only probabilistic for sparse containers (a
-    *     sparse array from another shift whose slots all fit this shift's
-    *     range decoded silently and mis-mapped lsns).
-    *   - sparse (legacy round-6 writer): `words.length < nWords`,
-    *     non-negative strictly-increasing slot values, no sentinel —
-    *     accepted with the range/order guard (best available for data
-    *     already on disk).
+    *     lsn slot.
+    *   - sparse (self-describing): 1-3 leading `-shift` SENTINELS (slot
+    *     values are non-negative, so the sign discriminates) followed by
+    *     the strictly-increasing SET SLOT VALUES. The sentinel count pads
+    *     the TOTAL length to a non-power-of-two, so a sparse container can
+    *     never equal ANY shift's dense length (every nWords is a power of
+    *     two) — without the padding, a shift-14 sparse array of length 16
+    *     resumed at shift 10 would be misread as that shift's dense
+    *     bitmap. Used while still strictly shorter than the bitmap. The
+    *     embedded shift makes a different-shift resume LOUD
+    *     deterministically.
     *
     * Why sparse at all: measured in BENCH.md round 6, stray lsns far from
     * the dense WAL window (long-lived transactions, hot-key tails) each
@@ -109,12 +102,9 @@ object IntervalDedup {
   /** Expand a stored container to a mutable full bitmap (always a fresh
     * array — the store may hand back the object it retains for the prior
     * version). Loud on anything that is not a valid container for THIS
-    * shift: a sentinel-carrying sparse container embeds its shift
-    * (deterministic check); a checkpoint written under a larger shift
-    * arrives as a too-long array; a legacy smaller-shift bitmap can only
-    * masquerade as legacy sparse by being strictly increasing AND
-    * entirely within this shift's slot range — vanishingly unlikely for
-    * real bitmap words, and checked.
+    * shift: a sparse container must lead with this shift's sentinel
+    * (deterministic check), and a checkpoint written under a larger shift
+    * arrives as a too-long array.
     */
   private def isPow2(n: Int): Boolean = n > 0 && (n & (n - 1)) == 0
 
@@ -129,12 +119,13 @@ object IntervalDedup {
       // sparse container's LENGTH is never a power of two, hence never
       // equals any shift's nWords — a sparse container from shift A can
       // therefore never be misread as a dense bitmap at shift B (every
-      // nWords is a power of two). Legacy round-6 sparse has no sentinel.
+      // nWords is a power of two)
       var from = 0
       while (from < arr.length && arr(from) < 0) {
         require(arr(from) == -shift.toLong && from < 3, mismatch)
         from += 1
       }
+      require(from > 0, mismatch)
       val max = 1L << shift
       val words = new Array[Long](nWords)
       var i = from

@@ -62,7 +62,7 @@ case class Snapshot(
     // manifests — the 10^5-commits × 10^6-files metadata wall flagged in
     // round 2. `files` always holds the RESOLVED list in memory
     // (readSnapshot resolves manifests); buckets absent from this map have
-    // their files inlined in the meta (legacy/empty-table form).
+    // their files inlined in the meta as `file=` lines.
     bucketManifests: Map[Int, String] = Map.empty,
     // per-bucket MIN `_lsn` among delete tombstones (buckets with none are
     // absent) — maintained across COW commits from each write job's
@@ -71,13 +71,7 @@ case class Snapshot(
     // instead of rewriting the whole table — the COW analog of the
     // reference's O(processed-range) DELETE-after-normalize
     // (src/connectors/sinks/postgres/normalizer.rs:169-216).
-    bucketTombMinLsn: Map[Int, Long] = Map.empty,
-    // false only for metas written before the tombstone index existed: an
-    // EMPTY bucketTombMinLsn is ambiguous there (no tombstones vs not
-    // indexed), so compaction must fall back to considering every
-    // file-bearing bucket once. New metas always carry the `btminv`
-    // marker, making the empty map trustworthy.
-    tombIndexed: Boolean = true) {
+    bucketTombMinLsn: Map[Int, Long] = Map.empty) {
   def schema: StructType = schemas(schemaVersion)
   def rowCount: Long = bucketRowCounts.values.sum
 }
@@ -104,11 +98,11 @@ case class Snapshot(
   *      with no-overwrite semantics. Readers only ever see fully-committed
   *      versions.
   *
-  * Scale path: the snapshot file holds the full file manifest — one manifest
-  * line per data file. At 100 TB (~10^5-10^6 files) this stays a driver-side
-  * metadata read of tens of MB; the natural evolution is Iceberg-style
-  * manifest-list indirection, which this format is forward-compatible with
-  * (a `file=` line can point at a manifest instead).
+  * Scale path: Iceberg-style manifest-list indirection — the snapshot meta
+  * holds one `bmanifest=` line per bucket pointing at an immutable
+  * per-bucket manifest under `_manifests/`, so a commit writes O(touched
+  * buckets) manifests and an O(numBuckets) meta, independent of the
+  * table's file count (see [[Snapshot.bucketManifests]]).
   */
 final class LakeTable(val root: String, hadoopConf: Configuration)
     extends Serializable {
@@ -179,7 +173,8 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
 
   def readSnapshot(version: Long): Snapshot = {
     metaFileReads += 1
-    val snap = SnapshotCodec.decode(readTextFile(metaPath(version)))
+    val path = metaPath(version)
+    val snap = SnapshotCodec.decode(readTextFile(path), path.toString)
     if (snap.bucketManifests.isEmpty) snap
     else {
       if (manifestCache.size > math.max(1024, 4 * snap.numBuckets))
@@ -318,12 +313,7 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
       backfillDone = backfillDone.getOrElse(base.backfillDone),
       bucketManifests = manifests,
       bucketTombMinLsn =
-        (base.bucketTombMinLsn -- touchedBuckets) ++ tombMinByBucket,
-      // a legacy (unindexed) table becomes indexed only once a commit has
-      // recomputed stats for EVERY file-bearing bucket (the upgrade
-      // compact pass); partial commits inherit the legacy status
-      tombIndexed = base.tombIndexed ||
-        (base.files.map(_.bucket).toSet -- touchedBuckets).isEmpty)
+        (base.bucketTombMinLsn -- touchedBuckets) ++ tombMinByBucket)
     writeSnapshot(next)
     next
   }
@@ -620,24 +610,13 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
       maxBuckets: Int = Int.MaxValue): (Snapshot, Set[Int]) = {
     val snap = snapshot()
     val filesPerBucket = snap.files.groupBy(_.bucket).view.mapValues(_.size)
-    val tombDirty =
-      if (!snap.tombIndexed)
-        // legacy meta (pre-index): an empty map means "unknown", not
-        // "clean" — consider every file-bearing bucket once; the rewrite
-        // commits an indexed meta, so the next call is O(dirty) again
-        snap.files.map(_.bucket).toSet
-      else snap.bucketTombMinLsn.collect {
-        case (b, minLsn) if minLsn <= horizonLsn => b
-      }.toSet
+    val tombDirty = snap.bucketTombMinLsn.collect {
+      case (b, minLsn) if minLsn <= horizonLsn => b
+    }.toSet
     val fileDirty = filesPerBucket.collect {
       case (b, n) if n > fileThreshold => b
     }.toSet
-    // legacy upgrade pass ignores maxBuckets: the rewritten meta carries
-    // the index marker, so a PARTIAL pass would wrongly certify the
-    // untouched buckets as indexed-and-clean
-    val selected =
-      if (!snap.tombIndexed) tombDirty ++ fileDirty
-      else (tombDirty ++ fileDirty).toSeq.sorted.take(maxBuckets).toSet
+    val selected = (tombDirty ++ fileDirty).toSeq.sorted.take(maxBuckets).toSet
     if (selected.isEmpty) return (snap, Set.empty)
     val kept = readFiles(spark, snap, Some(selected))
       .filter(!(col("_op") === 2 && col("_lsn") <= horizonLsn))
@@ -738,44 +717,23 @@ final class LakeTable(val root: String, hadoopConf: Configuration)
 
   /** Lineage/metrics as a DataFrame. Reads the append-only `_lineage/`
     * table — ONE distributed scan, no driver-side decode of every snapshot
-    * meta (the round-4 audit's O(versions)-sequential-FS-reads wall) — and
-    * history survives [[vacuum]], which GCs metas but never lineage.
-    * Tables created before the lineage table existed (no `_lineage/` dir)
-    * fall back to the legacy snapshot-log derivation.
+    * meta — and history survives [[vacuum]], which GCs metas but never
+    * lineage. A table with no lineage-bearing commit yet (no `_lineage/`
+    * dir) has an empty history.
     */
   def lineageDf(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    // legacy derivation: decode retained snapshot metas (tables written
-    // before the _lineage table existed, or versions below its floor)
-    def fromMetas(versions: Seq[Long]): DataFrame =
-      versions.sorted.map(readSnapshot).flatMap { s =>
-        s.lineage.map(l => (s.version, l.batchId, l.startLsn, l.endLsn,
-          l.inserted, l.updated, l.deleted, l.wallMs,
-          l.bucketRows.values.sum, s.schemaVersion, l.skippedEvolutions))
-      }.toDF("snapshot_version", "batch_id", "start_lsn", "end_lsn",
-        "inserted", "updated", "deleted", "wall_ms", "rows_after",
-        "schema_version", "skipped_evolutions")
-    if (!fs.exists(lineageDir)) return fromMetas(listVersions())
+    if (!fs.exists(lineageDir))
+      return spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], lineageSchema)
     // dropDuplicates: a crashed compactLineage can leave a row in both
     // the combined file and a not-yet-deleted original — reads stay
     // exact through every crash window
     // the isNotNull guard drops any all-null row a PERMISSIVE read makes
-    // of a corrupt/legacy-truncated file, so it can never shadow a real
+    // of a corrupt/truncated file, so it can never shadow a real
     // version inside dropDuplicates
-    val t = spark.read.schema(lineageSchema).json(lineageDir.toString)
+    spark.read.schema(lineageSchema).json(lineageDir.toString)
       .filter(col("snapshot_version").isNotNull)
       .dropDuplicates("snapshot_version")
-    // upgrade path: commits made before the lineage table's first append
-    // exist only in their snapshot metas — merge the retained ones below
-    // the table's floor instead of silently truncating history (vacuumed
-    // metas stay gone, exactly as under the legacy derivation)
-    val floorRow = t.agg(min(col("snapshot_version"))).head()
-    val floor = if (floorRow.isNullAt(0)) Long.MaxValue else floorRow.getLong(0)
-    // v1 is always the lineage-less create commit: skipping it keeps the
-    // common case (lineage table born with the lake, floor = 2) at ZERO
-    // meta opens
-    val legacy = listVersions().filter(v => v < floor && v > 1L)
-    (if (legacy.isEmpty) t else t.unionByName(fromMetas(legacy)))
       .orderBy(col("snapshot_version"))
   }
 
@@ -869,11 +827,17 @@ object LakeTable {
 }
 
 /** Line-oriented snapshot codec. Schemas serialize via Spark's own
-  * StructType JSON (single line); everything else is `key=value`.
+  * StructType JSON (single line); everything else is `key=value`. Every
+  * meta carries exactly one `format=1` line; [[decode]] refuses anything
+  * else — a meta from another format or a corrupt file fails loudly
+  * instead of decoding into a silently wrong snapshot.
   */
 object SnapshotCodec {
+  val Format = "1"
+
   def encode(s: Snapshot): String = {
     val b = new StringBuilder
+    b ++= s"format=$Format\n"
     b ++= s"version=${s.version}\n"
     b ++= s"batchId=${s.batchId}\n"
     b ++= s"schemaVersion=${s.schemaVersion}\n"
@@ -896,9 +860,6 @@ object SnapshotCodec {
     s.bucketManifests.toSeq.sorted.foreach { case (bk, rel) =>
       b ++= s"bmanifest=$bk|$rel\n"
     }
-    // marker only when the index is actually trustworthy: copies of a
-    // legacy snapshot (heartbeats, schema commits) must not self-certify
-    if (s.tombIndexed) b ++= "btminv=1\n"
     s.bucketTombMinLsn.toSeq.sorted.foreach { case (bk, l) =>
       b ++= s"btmin=$bk|$l\n"
     }
@@ -910,7 +871,12 @@ object SnapshotCodec {
     b.result()
   }
 
-  def decode(text: String): Snapshot = {
+  /** Decode the meta `text` read from `file` (named in every error). */
+  def decode(text: String, file: String): Snapshot = {
+    def unreadable(why: String) = new IllegalStateException(
+      s"unreadable snapshot meta $file: $why. This build reads only " +
+        s"format=$Format metas; re-create the table (fresh lake root and " +
+        "checkpoint) and replay its source")
     var version = 0L; var batchId = -1L; var schemaVersion = 1
     var endLsn = -1L; var numBuckets = 16; var backfillDone = 0
     val schemas = scala.collection.mutable.Map[Int, StructType]()
@@ -921,11 +887,13 @@ object SnapshotCodec {
     val brows = scala.collection.mutable.Map[Int, Long]()
     val bmanifests = scala.collection.mutable.Map[Int, String]()
     val btmin = scala.collection.mutable.Map[Int, Long]()
-    var btminMarker = false
+    val formats = scala.collection.mutable.ArrayBuffer[String]()
     text.split('\n').filter(_.nonEmpty).foreach { line =>
       val i = line.indexOf('=')
+      if (i < 0) throw unreadable(s"line '${line.take(80)}' is not key=value")
       val (k, v) = (line.substring(0, i), line.substring(i + 1))
       k match {
+        case "format"        => formats += v
         case "version"       => version = v.toLong
         case "batchId"       => batchId = v.toLong
         case "schemaVersion" => schemaVersion = v.toInt
@@ -942,7 +910,7 @@ object SnapshotCodec {
           val a = v.split('|')
           lin = Some(LineageEntry(a(0).toLong, a(1).toLong, a(2).toLong,
             a(3).toLong, a(4).toLong, a(5).toLong, a(6).toLong, Map.empty,
-            if (a.length > 7) a(7).toLong else 0L))
+            a(7).toLong))
         case "bucketrows" =>
           val Array(bk, n) = v.split('|'); bucketRows(bk.toInt) = n.toLong
         case "brows" =>
@@ -950,7 +918,6 @@ object SnapshotCodec {
         case "bmanifest" =>
           val i2 = v.indexOf('|')
           bmanifests(v.substring(0, i2).toInt) = v.substring(i2 + 1)
-        case "btminv" => btminMarker = true
         case "btmin" =>
           val Array(bk, l) = v.split('|'); btmin(bk.toInt) = l.toLong
         case "file" =>
@@ -959,15 +926,13 @@ object SnapshotCodec {
         case _ => // forward compatibility: ignore unknown keys
       }
     }
+    if (formats.toSeq != Seq(Format))
+      throw unreadable(
+        if (formats.isEmpty) "no format line"
+        else s"format lines ${formats.mkString("[", ", ", "]")}")
     Snapshot(version, batchId, schemaVersion, endLsn, numBuckets,
       schemas.toMap, colAdd.toMap,
       lin.map(_.copy(bucketRows = bucketRows.toMap)), files.toSeq,
-      brows.toMap, backfillDone, bmanifests.toMap, btmin.toMap,
-      // the MARKER alone decides: btmin and the marker shipped in the same
-      // change, so a marker-less meta carrying btmin lines can only be a
-      // PARTIAL commit on a legacy (unindexed) table — its btmin map covers
-      // just the touched buckets, and trusting it would let compaction skip
-      // the untouched legacy buckets' tombstones forever
-      tombIndexed = btminMarker)
+      brows.toMap, backfillDone, bmanifests.toMap, btmin.toMap)
   }
 }

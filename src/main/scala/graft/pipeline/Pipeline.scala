@@ -11,7 +11,7 @@ import graft.model.Schemas
 /** Wiring of the end-to-end streaming pipeline — the Spark collapse of the
   * reference's engine run loop (reference: src/engine/mod.rs:108-288):
   *
-  *   readStream(binlog segments) → watermark + dropDuplicatesWithinWatermark
+  *   readStream(binlog segments) → IntervalDedup (lsn transport dedup)
   *   → foreachBatch { reconcile → dedup/LWW → COW MERGE → lineage commit }
   *
   * Exactly-once: Structured Streaming WALs source offsets before running a
@@ -80,48 +80,15 @@ object Pipeline {
     }
   }
 
-  /** The transport-dedup front end shared by every query shape. Modes:
-    *   - "interval" (default): [[graft.dedup.IntervalDedup]] —
-    *     interval-compressed state, O(lsn-range buckets) instead of
-    *     O(events-in-watermark); the 10^10-event-scale configuration.
-    *     "interval:N" overrides the bucket shift (lsns per bitmap bucket =
-    *     2^N). Measured guidance (BENCH.md round 6): under the adaptive
-    *     sparse/dense container, total state is ~range/8 bytes at ANY
-    *     shift, so the shift is a state-row-count/parallelism knob only —
-    *     the state-size bound is /rebase, not shift. The shift is
-    *     checkpoint-locked like the state partition count — resuming under
-    *     a different one fails loudly (IntervalDedup's word-count guard).
-    *   - "hash": `dropDuplicatesWithinWatermark("lsn")` — Spark's built-in
-    *     one-state-row-per-key dedup, kept for A/B measurement.
+  /** The transport-dedup front end shared by every query shape:
+    * [[graft.dedup.IntervalDedup]] at its default shift — interval-
+    * compressed state, O(lsn-range buckets) instead of O(events). No
+    * watermark: it needs none for state GC, and an event-time watermark
+    * here would DROP late input rows instead of deduping them.
     */
-  private def dedupStage(
-      src: DataFrame,
-      transportDedup: Boolean,
-      dedupImpl: String,
-      watermarkDelay: String): DataFrame =
-    (if (!transportDedup) src
-     else dedupImpl match {
-       // no watermark in interval mode: it needs none for state GC, and an
-       // event-time watermark here would DROP late input rows (the dDWW
-       // trap) instead of deduping them
-       case "interval" => graft.dedup.IntervalDedup.stage(src)
-       case s if s.startsWith("interval:") =>
-         val n = s.stripPrefix("interval:")
-         val shift =
-           try n.toInt
-           catch {
-             case _: NumberFormatException => throw new IllegalArgumentException(
-               s"bad dedupImpl '$s': expected interval:<shift>, e.g. interval:20")
-           }
-         graft.dedup.IntervalDedup.stage(src, shift)
-       case "hash" => src.withWatermark("ts", watermarkDelay)
-         .dropDuplicatesWithinWatermark("lsn")
-       case other => throw new IllegalArgumentException(
-         s"unknown dedupImpl '$other' (expected interval[:shift] | hash)")
-     })
-      // per-batch max event time via CollectMetrics: feeds the A9 lag
-      // metric in every mode (the watermark-derived progress.eventTime
-      // only exists in hash mode)
+  private def dedupStage(src: DataFrame, transportDedup: Boolean): DataFrame =
+    (if (transportDedup) graft.dedup.IntervalDedup.stage(src) else src)
+      // per-batch max event time via CollectMetrics: feeds the A9 lag metric
       .observe("graft_event_time", max(col("ts")).as("max_ts"))
 
   /** Inline lake maintenance on the commit thread (the COW analog of the
@@ -172,8 +139,9 @@ object Pipeline {
     * @param availableNow true = drain all available segments then stop
     *   (tests/bench); false = continuous 5s trigger (the daemon shape).
     * @param transportDedup enable the cross-batch stateful dedup stage
-    *   (`dropDuplicatesWithinWatermark` keyed by the source offset) — state
-    *   is GC'd by the event-time watermark, bounding it at 10^10-event scale.
+    *   ([[graft.dedup.IntervalDedup]] keyed by the source offset) — state
+    *   is one bitmap container per touched lsn-range bucket, bounded at
+    *   10^10-event scale by the checkpoint-rebase path.
     * @param chunkSource when set, concurrent chunked backfill (reference T7):
     *   after each micro-batch apply, up to `chunksPerBatch` pending snapshot
     *   chunks are merged under the stream's current applied position as
@@ -198,11 +166,9 @@ object Pipeline {
       maxFilesPerTrigger: Int = 1,
       availableNow: Boolean = true,
       transportDedup: Boolean = true,
-      watermarkDelay: String = "10 minutes",
       chunkSource: Option[Backfill.ChunkSource] = None,
       chunksPerBatch: Int = 1,
       applyShufflePartitions: Option[Int] = None,
-      dedupImpl: String = "interval",
       // consulted before each interleaved backfill step: false pauses the
       // snapshot while the CDC stream keeps flowing (reference
       // snapshot_pause, handlers.rs:233-245)
@@ -213,7 +179,7 @@ object Pipeline {
       .schema(Schemas.changeEvent)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(binlogDir)
-    val src = dedupStage(src0, transportDedup, dedupImpl, watermarkDelay)
+    val src = dedupStage(src0, transportDedup)
     val idOff = batchIdOffset(spark, checkpointDir, lake.snapshot().batchId)
     src.writeStream
       .queryName("graft-cdc")
@@ -254,9 +220,7 @@ object Pipeline {
       maxFilesPerTrigger: Int = 1,
       availableNow: Boolean = true,
       transportDedup: Boolean = true,
-      watermarkDelay: String = "10 minutes",
       applyShufflePartitions: Option[Int] = None,
-      dedupImpl: String = "interval",
       // inline sink maintenance cadence (sink.maintain on the commit
       // thread every N batches — for raw-append: normalize fold + staged-
       // dir compaction + tmp reaping); 0 = off. Same single-writer shape
@@ -267,7 +231,7 @@ object Pipeline {
       .schema(Schemas.changeEvent)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(binlogDir)
-    val src = dedupStage(src0, transportDedup, dedupImpl, watermarkDelay)
+    val src = dedupStage(src0, transportDedup)
     val idOff = batchIdOffset(spark, checkpointDir, sink.lastBatchId(spark))
     src.writeStream
       .queryName("graft-cdc-sink")
@@ -300,8 +264,6 @@ object Pipeline {
       maxFilesPerTrigger: Int = 1,
       availableNow: Boolean = true,
       transportDedup: Boolean = true,
-      watermarkDelay: String = "10 minutes",
-      dedupImpl: String = "interval",
       maintenance: Option[Maintenance] = None,
       // same decoupling as start(): the dedup state partition count is
       // checkpoint-locked, the per-table MERGEs must track the CURRENT
@@ -312,7 +274,7 @@ object Pipeline {
       .schema(Schemas.changeEventMulti)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(binlogDir)
-    val src = dedupStage(src0, transportDedup, dedupImpl, watermarkDelay)
+    val src = dedupStage(src0, transportDedup)
     val idOff = batchIdOffset(spark, checkpointDir,
       lakes.values.map(_.snapshot().batchId).foldLeft(-1L)(math.max))
     val maintOrder = lakes.keys.toSeq.sorted
@@ -356,16 +318,13 @@ object Pipeline {
       chunkSource: Option[Backfill.ChunkSource] = None,
       chunksPerBatch: Int = 1,
       applyShufflePartitions: Option[Int] = None,
-      watermarkDelay: String = "10 minutes",
-      dedupImpl: String = "interval",
       backfillGate: () => Boolean = () => true,
       maintenance: Option[Maintenance] = None): Unit = {
     val q = start(spark, binlogDir, lake, checkpointDir, maxFilesPerTrigger,
       availableNow = true, transportDedup = transportDedup,
-      watermarkDelay = watermarkDelay,
       chunkSource = chunkSource, chunksPerBatch = chunksPerBatch,
       applyShufflePartitions = applyShufflePartitions,
-      dedupImpl = dedupImpl, backfillGate = backfillGate,
+      backfillGate = backfillGate,
       maintenance = maintenance)
     q.awaitTermination()
     chunkSource.foreach { src =>

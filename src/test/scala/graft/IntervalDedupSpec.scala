@@ -103,28 +103,23 @@ class IntervalSetSpec extends AnyFunSuite {
       if (enc14.length < (1 << (14 - 6)))
         assert((enc14.length & (enc14.length - 1)) != 0, s"pc=$pc pow2 len")
     }
-    // legacy round-6 sparse containers (no sentinel, strictly-increasing
-    // slots) decode unchanged
-    val legacySparse = Array(3L, 64L, 1000L)
-    val lsDec = IntervalDedup.decode(legacySparse, nWords, shift)
-    assert(Seq(3, 64, 1000).forall(s => (lsDec(s >>> 6) & (1L << (s & 63))) != 0))
-    assert(lsDec.map(java.lang.Long.bitCount).sum == 3)
-    // legacy dense containers (every pre-round-6 checkpoint) decode to a
-    // CLONE — mutating the result must not reach the stored array
+    // dense containers decode to a CLONE — mutating the result must not
+    // reach the stored array
     val legacy = Array.fill(nWords)(rnd.nextLong())
     val dec = IntervalDedup.decode(legacy, nWords, shift)
     assert(dec.sameElements(legacy))
     dec(0) ^= -1L
     assert(!dec.sameElements(legacy))
-    // rejects: a larger-shift checkpoint (too long), an unsorted sparse
-    // array (e.g. a smaller-shift bitmap masquerading), an out-of-range
-    // slot, and a sentinel from ANOTHER shift (the round-7 deterministic
-    // guard ADVICE asked for) — each loud, each naming the remedy
+    // rejects: a larger-shift checkpoint (too long), a sparse array
+    // without a sentinel (e.g. a smaller-shift bitmap masquerading), an
+    // unsorted or out-of-range slot, and a sentinel from ANOTHER shift —
+    // each loud, each naming the remedy
     for (bad <- Seq(
       new Array[Long](nWords * 2),
-      Array(5L, 3L),          // not strictly increasing
-      Array(0L, 0L),          // duplicate (a two-zero-word bitmap shape)
-      Array(3L, 1024L),       // slot beyond this shift's range
+      Array(3L, 64L, 1000L),  // no sentinel
+      Array(-10L, 5L, 3L),    // not strictly increasing
+      Array(-10L, 0L, 0L),    // duplicate slot
+      Array(-10L, 3L, 1024L), // slot beyond this shift's range
       Array(-20L, 3L, 9L),    // sentinel says shift 20, we are shift 10
       Array(-14L))) {         // empty sparse from shift 14
       val e = intercept[IllegalArgumentException] {
@@ -195,7 +190,7 @@ class IntervalDedupSpec extends SparkSpec {
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 8)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2, dedupImpl = "interval")
+      maxFilesPerTrigger = 2)
     assert(liveState(lake) == OracleFold.finalState(events))
   }
 
@@ -220,7 +215,7 @@ class IntervalDedupSpec extends SparkSpec {
     spark.streams.addListener(listener)
     try {
       Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-        maxFilesPerTrigger = 2, dedupImpl = "interval")
+        maxFilesPerTrigger = 2)
     } finally {
       // listener bus is async; drain before asserting
       val deadline = System.currentTimeMillis() + 10000
@@ -253,7 +248,7 @@ class IntervalDedupSpec extends SparkSpec {
     val lake = LakeTable(spark, s"$work/lake")
     lake.create(Schemas.transcript, 8)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval")
+      maxFilesPerTrigger = 1)
     assert(liveState(lake) == OracleFold.finalState(events))
     val batchIdBefore = lake.snapshot().batchId
     assert(batchIdBefore >= 3, "fixture must span several batches")
@@ -294,7 +289,7 @@ class IntervalDedupSpec extends SparkSpec {
     spark.streams.addListener(listener)
     try {
       Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-        maxFilesPerTrigger = 2, dedupImpl = "interval")
+        maxFilesPerTrigger = 2)
     } finally {
       val deadline = System.currentTimeMillis() + 10000
       while (maxStateRows < 0 && System.currentTimeMillis() < deadline)
@@ -308,59 +303,6 @@ class IntervalDedupSpec extends SparkSpec {
     assert(lake.snapshot().batchId > batchIdBefore)
     // fresh state rebuilt from scratch stays bitmap-bounded
     assert(maxStateRows >= 0 && maxStateRows <= events.size / 10)
-  }
-
-  test("shift 20: checkpoint-locked — mismatched resume fails actionably, " +
-      "matching resume stays exact") {
-    // interval:20 = 2^20 lsns per bucket — a state-row-count/parallelism
-    // knob only (BENCH.md round 6: the adaptive container holds total
-    // state at ~range/8 at ANY shift); the shift is baked into the
-    // checkpointed state like the partition count, so a resume under the
-    // DEFAULT shift must fail with the remedy, and a matching resume must
-    // keep replay equality
-    val cfg = GenConfig(seed = 41, numConvs = 40, eventsPerConv = 20)
-    val events = BinlogGen.events(cfg)
-    val firstHalf = events.filter(_.lsn < events(events.size / 2).lsn)
-    val work = tmpDir("ivshift20")
-    val fs = new Path(work).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def deliver(src: String, prefix: String, mtime0: Long): Unit =
-      for ((p, i) <- fs.listStatus(new Path(src)).map(_.getPath)
-          .sortBy(_.getName).zipWithIndex) {
-        val to = new Path(s"$work/binlog", prefix + p.getName)
-        org.apache.hadoop.fs.FileUtil.copy(fs, p, fs, to, false,
-          spark.sparkContext.hadoopConfiguration)
-        fs.setTimes(to, mtime0 + i * 1000L, -1)
-      }
-    BinlogGen.writeSegments(spark,
-      spark.createDataset(firstHalf).toDF(), s"$work/seg-a", 3)
-    val lake = LakeTable(spark, s"$work/lake")
-    lake.create(Schemas.transcript, 8)
-    fs.mkdirs(new Path(s"$work/binlog"))
-    deliver(s"$work/seg-a", "a-", BinlogGen.BaseMs)
-    Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval:20")
-    assert(liveState(lake) == OracleFold.finalState(firstHalf))
-
-    // rest of the log + a redelivered slice: resuming under the DEFAULT
-    // shift hits stored shift-20 bitmaps and must fail loudly
-    val rest = events.filterNot(firstHalf.contains) ++ firstHalf.take(30)
-    BinlogGen.writeSegments(spark,
-      spark.createDataset(rest.sortBy(_.lsn)).toDF(), s"$work/seg-b", 3)
-    deliver(s"$work/seg-b", "b-", BinlogGen.BaseMs + 100000L)
-    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-      Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-        maxFilesPerTrigger = 1, dedupImpl = "interval")
-    }
-    def rootChain(t: Throwable): Seq[Throwable] =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(10).toSeq
-    assert(rootChain(e).exists(c =>
-      c.getMessage != null && c.getMessage.contains("different shift")),
-      s"wrong failure: $e")
-    // the failed batch never committed: the matching-shift resume replays
-    // it and converges on the full-history oracle
-    Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval:20")
-    assert(liveState(lake) == OracleFold.finalState(events))
   }
 
   test("stop/restart: redelivery across restart collapses; state resumes") {
@@ -387,14 +329,14 @@ class IntervalDedupSpec extends SparkSpec {
     fs.mkdirs(new Path(s"$work/binlog"))
     deliver(s"$work/seg-a", "a-", BinlogGen.BaseMs)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval")
+      maxFilesPerTrigger = 1)
     // restart: remaining events + a redelivered slice of the first half
     val rest = events.filterNot(firstHalf.contains) ++ firstHalf.take(30)
     BinlogGen.writeSegments(spark,
       spark.createDataset(rest.sortBy(_.lsn)).toDF(), s"$work/seg-b", 3)
     deliver(s"$work/seg-b", "b-", BinlogGen.BaseMs + 100000L)
     Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 1, dedupImpl = "interval")
+      maxFilesPerTrigger = 1)
     assert(liveState(lake) == OracleFold.finalState(events))
   }
 }

@@ -82,7 +82,7 @@ class LakeManifestSpec extends SparkSpec {
     assert(after.filter(_.conv_id != "conv_0007") ==
       before.filter(_.conv_id != "conv_0007"))
     // codec round-trip preserves the resolved view
-    val decoded = SnapshotCodec.decode(SnapshotCodec.encode(snap))
+    val decoded = SnapshotCodec.decode(SnapshotCodec.encode(snap), "test")
     assert(decoded.bucketManifests == snap.bucketManifests)
     assert(lake.readSnapshot(snap.version).files.toSet == snap.files.toSet)
   }
@@ -176,79 +176,36 @@ class LakeManifestSpec extends SparkSpec {
     assert(sel3.isEmpty && snap3.version == vBefore)
   }
 
-  test("legacy meta without the tombstone index upgrades via one full compact pass") {
-    val lake = LakeTable(spark, tmpDir("mflegacy"))
+  test("a meta without exactly one format=1 line fails loudly, naming the file") {
+    val lake = LakeTable(spark, tmpDir("mfformat"))
     lake.create(Schemas.transcript, 4)
-    MergeApply.applyBatch(spark, lake, spark.createDataset((0 until 40).map(
+    MergeApply.applyBatch(spark, lake, spark.createDataset((0 until 8).map(
       i => ev(2L * i + 2, Op.Insert, f"conv_$i%04d", 0, text = s"t$i"))).toDF(), 0L)
-    MergeApply.applyBatch(spark, lake, spark.createDataset(
-      Seq(ev(1001, Op.Delete, "conv_0000", 0))).toDF(), 1L)
-    // simulate a pre-index meta: strip the btminv marker + btmin lines
-    // from the newest meta file
-    val fs = fsOf(lake)
-    val newest = lake.snapshotVersions().max
-    val metaPath = new Path(lake.root,
-      f"_log/v$newest%012d.meta")
-    val stripped = scala.io.Source.fromInputStream(fs.open(metaPath))
-      .getLines().filterNot(l =>
-        l.startsWith("btminv=") || l.startsWith("btmin=")).mkString("\n") + "\n"
-    val o = fs.create(metaPath, true)
-    try o.write(stripped.getBytes("UTF-8")) finally o.close()
-
-    val legacy = LakeTable(spark, lake.root) // fresh handle: no meta cache
-    assert(!legacy.snapshot().tombIndexed)
-    val live = liveState(legacy)
-    // a heartbeat copy of a legacy snapshot must NOT self-certify
-    legacy.commitEmpty(legacy.snapshot(), batchId = 99L)
-    assert(!LakeTable(spark, lake.root).snapshot().tombIndexed)
-    // the upgrade pass ignores maxBuckets (a partial pass would wrongly
-    // certify untouched buckets) and retires the hidden tombstone
-    val fresh = LakeTable(spark, lake.root)
-    val (snapUp, sel) = fresh.compactIncremental(spark, horizonLsn = 2000,
-      maxBuckets = 1)
-    assert(sel.size > 1, "upgrade pass must cover every file-bearing bucket")
-    assert(snapUp.tombIndexed && snapUp.bucketTombMinLsn.isEmpty)
-    assert(fresh.read(spark, includeTombstones = true)
-      .filter("_op = 2").count() == 0)
-    assert(liveState(fresh) == live)
-    // subsequent calls trust the index again: clean table -> no-op
-    assert(fresh.compactIncremental(spark, horizonLsn = 2000)._2.isEmpty)
-  }
-
-  test("partial commit on a legacy meta does not self-certify the tomb index") {
-    val lake = LakeTable(spark, tmpDir("mflegacy2"))
-    lake.create(Schemas.transcript, 4)
-    // seed across all buckets, incl. a legacy-era tombstone the partial
-    // commit will NOT touch
-    MergeApply.applyBatch(spark, lake, spark.createDataset((0 until 40).map(
-      i => ev(2L * i + 2, Op.Insert, f"conv_$i%04d", 0, text = s"t$i"))).toDF(), 0L)
-    MergeApply.applyBatch(spark, lake, spark.createDataset(
-      Seq(ev(201, Op.Delete, "conv_0001", 0))).toDF(), 1L)
-    // strip marker + btmin lines: a pre-index meta
     val fs = fsOf(lake)
     val metaPath = new Path(lake.root,
       f"_log/v${lake.snapshotVersions().max}%012d.meta")
-    val stripped = scala.io.Source.fromInputStream(fs.open(metaPath))
-      .getLines().filterNot(l =>
-        l.startsWith("btminv=") || l.startsWith("btmin=")).mkString("\n") + "\n"
-    val o = fs.create(metaPath, true)
-    try o.write(stripped.getBytes("UTF-8")) finally o.close()
-
-    val legacy = LakeTable(spark, lake.root)
-    assert(!legacy.snapshot().tombIndexed)
-    // ONE partial MERGE commit containing a delete: its meta carries btmin
-    // lines for the touched bucket but must NOT certify the whole table
-    // (the untouched legacy tombstone would never be GC'd)
-    MergeApply.applyBatch(spark, legacy, spark.createDataset(
-      Seq(ev(301, Op.Delete, "conv_0002", 0))).toDF(), 2L)
-    val reopened = LakeTable(spark, lake.root)
-    assert(!reopened.snapshot().tombIndexed,
-      "partially-indexed legacy table self-certified")
-    // the full upgrade pass still certifies and retires BOTH tombstones
-    val (snapUp, _) = reopened.compactIncremental(spark, horizonLsn = 2000)
-    assert(snapUp.tombIndexed)
-    assert(reopened.read(spark, includeTombstones = true)
-      .filter("_op = 2").count() == 0)
+    val original = scala.io.Source.fromInputStream(fs.open(metaPath))
+      .getLines().toVector
+    assert(original.count(_ == "format=1") == 1)
+    def writeMeta(lines: Seq[String]): Unit = {
+      val o = fs.create(metaPath, true)
+      try o.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+      finally o.close()
+    }
+    for (mutated <- Seq(
+        original.filterNot(_.startsWith("format=")),                   // removed
+        original.map(l => if (l == "format=1") "format=2" else l),     // changed
+        original :+ "format=1")) {                                     // doubled
+      writeMeta(mutated)
+      val e = intercept[IllegalStateException] {
+        LakeTable(spark, lake.root).snapshot() // fresh handle: no cache
+      }
+      assert(e.getMessage.contains(metaPath.getName) &&
+        e.getMessage.contains("re-create the table"), e.getMessage)
+    }
+    writeMeta(original)
+    assert(LakeTable(spark, lake.root).snapshot().version ==
+      lake.snapshotVersions().max)
   }
 
   test("vacuum sweeps superseded manifests, never referenced ones") {

@@ -251,6 +251,17 @@ class MergeApplySpec extends SparkSpec {
       == after)
   }
 
+  test("lineage of a just-created lake is empty, with the committed columns") {
+    val lake = newLake(4)
+    val empty = lake.lineageDf(spark)
+    assert(empty.count() == 0)
+    applyAll(lake, Seq(Seq(ev(2, Op.Insert, "c1", 0, text = "a"))))
+    val committed = lake.lineageDf(spark)
+    assert(committed.count() == 1)
+    assert(empty.schema == committed.schema && empty.columns.length == 11,
+      s"${empty.schema} vs ${committed.schema}")
+  }
+
   test("a truncated lineage file neither corrupts neighbors nor fakes rows") {
     val lake = newLake(4)
     applyAll(lake, (0 until 4).map(i =>

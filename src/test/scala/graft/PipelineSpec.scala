@@ -147,22 +147,6 @@ class PipelineSpec extends SparkSpec {
     assert(liveState(lake) == OracleFold.finalState(events))
   }
 
-  test("transport duplicates collapse under the hash dedup too (A/B path)") {
-    // dedupImpl=hash (dropDuplicatesWithinWatermark) stays supported for
-    // A/B measurement and pre-round-4 checkpoints — keep it from rotting
-    val cfg = GenConfig(seed = 17, numConvs = 30, eventsPerConv = 20)
-    val events = BinlogGen.events(cfg)
-    val dup = events ++ events.filter(_.lsn % 7 == 0)
-    val work = tmpDir("stream5h")
-    BinlogGen.writeSegments(spark,
-      spark.createDataset(dup.sortBy(_.lsn)).toDF(), s"$work/binlog", 6)
-    val lake = LakeTable(spark, s"$work/lake")
-    lake.create(Schemas.transcript, 8)
-    Pipeline.runAvailable(spark, s"$work/binlog", lake, s"$work/ckpt",
-      maxFilesPerTrigger = 2, dedupImpl = "hash")
-    assert(liveState(lake) == OracleFold.finalState(events))
-  }
-
   test("lsn-ordered redelivery collapses even WITHOUT the stateful dedup") {
     // For an lsn-monotone segment source, at-least-once redelivery is
     // already effectively-once without dropDuplicatesWithinWatermark:

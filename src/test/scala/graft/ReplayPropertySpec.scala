@@ -5,7 +5,6 @@ import scala.util.Random
 
 import graft.apply.MergeApply
 import graft.binlog.{BinlogGen, OracleFold}
-import graft.dedup.Dedup
 import graft.lake.LakeTable
 import graft.model.{ChangeEvent, Op, Schemas, Transcript}
 
@@ -142,20 +141,6 @@ class ReplayPropertySpec extends SparkSpec {
       // bookkeeping: first add wins; the duplicate ddl cannot move it
       assert(lake.snapshot().colAddLsn.get("tool").contains(addLsn),
         s"seed=$seed colAddLsn=${lake.snapshot().colAddLsn}")
-    }
-  }
-
-  test("salted two-phase LWW ≡ single-phase LWW on random skewed batches") {
-    for (seed <- 1L to 4L) {
-      val events = randomLog(seed * 7, 300)
-      val df = spark.createDataset(events).toDF()
-      val payload = Schemas.payloadCols(Schemas.transcript)
-      val a = Dedup.lwwReduce(df, payload)
-        .orderBy("conv_id", "turn_idx").collect().toSeq
-      val b = Dedup.lwwReduceSalted(df, payload, saltBuckets = 7)
-        .select(a.head.schema.fieldNames.map(org.apache.spark.sql.functions.col): _*)
-        .orderBy("conv_id", "turn_idx").collect().toSeq
-      assert(a == b, s"seed=$seed")
     }
   }
 }

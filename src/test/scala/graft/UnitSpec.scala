@@ -68,14 +68,25 @@ class UnitSpec extends AnyFunSuite {
       Some(LineageEntry(3L, 10L, 999L, 5L, 2L, 1L, 1234L, Map(0 -> 7L, 3 -> 2L))),
       Seq(DataFileEntry(0, 1, "data/b=0/v1-0.parquet"),
         DataFileEntry(3, 2, "data/b=3/v7-0.parquet")))
-    assert(SnapshotCodec.decode(SnapshotCodec.encode(s)) == s)
+    assert(SnapshotCodec.decode(SnapshotCodec.encode(s), "test") == s)
   }
 
   test("snapshot codec ignores unknown keys (forward compatibility)") {
     val s = Snapshot(1L, -1L, 1, -1L, 8, Map(1 -> base), Map.empty, None, Nil)
     val decoded = SnapshotCodec.decode(
-      SnapshotCodec.encode(s) + "futurefield=whatever\n")
+      SnapshotCodec.encode(s) + "futurefield=whatever\n", "test")
     assert(decoded == s)
+  }
+
+  test("snapshot codec: a line without '=' fails actionably, naming the file") {
+    val s = Snapshot(1L, -1L, 1, -1L, 8, Map(1 -> base), Map.empty, None, Nil)
+    val e = intercept[IllegalStateException] {
+      SnapshotCodec.decode(SnapshotCodec.encode(s) + "garbage\n",
+        "_log/v000000000001.meta")
+    }
+    assert(e.getMessage.contains("_log/v000000000001.meta") &&
+      e.getMessage.contains("garbage") &&
+      e.getMessage.contains("re-create the table"), e.getMessage)
   }
 
   test("ddl parse: add and widen with spark type json") {
